@@ -1,16 +1,22 @@
 """Snapshot catalog — Iceberg-shaped checkpointing with a parquet+manifest
 fallback (the sandbox has no Iceberg jars; the interface is the contract).
 
-Every pipeline stage commits atomically:
-1. write data parquet under   <root>/<stage>/data/
-2. write lineage parquet under <root>/<stage>/lineage/   (per-partition
-   rows: url-bucket, counts, optional link-score histogram json)
+Every pipeline stage commits atomically, in one pass over its build:
+1. write data parquet under   <root>/<stage>/data/ — the write observes
+   its own row count (``DataFrame.observe``), so the build runs once and
+   no ``count()`` job follows;
+2. read the committed data back with the schema just written (no
+   inference job) and derive lineage from that read-back, never from the
+   lazy build; write it under <root>/<stage>/lineage/ with its row count
+   observed the same way (per-url-bucket rows: bucket, counts, optional
+   link-score histogram json);
 3. atomically rename a manifest json into place — the commit point.
 
 Resume: a stage whose manifest exists is read back, not recomputed — a
 killed run therefore never reprocesses committed work (north rule:
 "resumes from the last committed snapshot").  Manifests carry row counts +
-schema for audit, plus the BACKEND the stage data actually lives in.
+schema for audit, plus the BACKEND the stage data actually lives in; the
+resume read uses the manifest's schema, so it runs no Spark job.
 
 Iceberg adoption (round 4, SURVEY §7.1): when (a) the Iceberg Spark
 runtime is on the classpath AND (b) a catalog name is configured
@@ -33,8 +39,9 @@ import re
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
 
@@ -87,49 +94,57 @@ class SnapshotCatalog:
         return f"{catalog}.{self.namespace}.{stage}"
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        if self.committed(stage):
-            man = self.manifest(stage)
-            if man.get("backend") == "iceberg":
-                return spark.table(man["table"])
-        return spark.read.parquet(os.path.join(self._dir(stage), "data"))
+        """A committed stage reads with the schema its manifest stores, so
+        the read runs no schema-inference job."""
+        data = os.path.join(self._dir(stage), "data")
+        if not self.committed(stage):
+            return spark.read.parquet(data)
+        man = self.manifest(stage)
+        if man.get("backend") == "iceberg":
+            return spark.table(man["table"])
+        schema = StructType.fromJson(json.loads(man["schema"]))
+        return spark.read.schema(schema).parquet(data)
 
     def read_lineage(self, spark: SparkSession, stage: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self._dir(stage), "lineage"))
 
     def commit(self, stage: str, df: DataFrame,
-               lineage: DataFrame | None = None,
-               partition_by: list[str] | None = None) -> DataFrame:
-        """Write + manifest-commit a stage; returns the re-read DataFrame
-        (reading back pins the stage output — downstream plans scan parquet
-        instead of recomputing the whole upstream lineage)."""
+               lineage_of=None) -> DataFrame:
+        """Write + manifest-commit a stage in one pass over ``df``; returns
+        the committed read-back (downstream plans scan the snapshot instead
+        of recomputing the whole upstream lineage).
+
+        The data write observes its own row count, and the read-back uses
+        the schema just written.  ``lineage_of(out)`` (may return None)
+        derives lineage from that read-back, never from ``df``, so the
+        build runs exactly once; the lineage write observes its row count
+        the same way.  No ``count()`` and no schema inference run."""
         d = self._dir(stage)
         if os.path.exists(d):
             shutil.rmtree(d)
         os.makedirs(d, exist_ok=True)
         spark = df.sparkSession
         catalog = _iceberg_catalog(spark)
+        data, rows = _observe_rows(df)
         if catalog is not None:
             table = self._table(catalog, stage)
             spark.sql(f"CREATE NAMESPACE IF NOT EXISTS "
                       f"{catalog}.{self.namespace}")
-            w = df.writeTo(table)
-            if partition_by:
-                w = w.partitionedBy(*[F.col(c) for c in partition_by])
-            w.createOrReplace()          # Iceberg metadata swap = commit
+            data.writeTo(table).createOrReplace()  # Iceberg metadata swap
             out = spark.table(table)
         else:
-            w = df.write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(os.path.join(d, "data"))
-            out = spark.read.parquet(os.path.join(d, "data"))
+            path = os.path.join(d, "data")
+            data.write.mode("overwrite").parquet(path)
+            out = spark.read.schema(df.schema).parquet(path)
+        lineage = lineage_of(out) if lineage_of is not None else None
         n_lineage = 0
         if lineage is not None:
+            lineage, lineage_rows = _observe_rows(lineage)
             lineage.write.mode("overwrite").parquet(os.path.join(d, "lineage"))
-            n_lineage = lineage.count()
+            n_lineage = lineage_rows.get["rows"]
         man = {
             "stage": stage,
-            "rows": out.count(),
+            "rows": rows.get["rows"],
             "lineage_rows": n_lineage,
             "schema": out.schema.json(),
             "committed_at_epoch": int(time.time()),
@@ -145,16 +160,21 @@ class SnapshotCatalog:
         return out
 
     def stage(self, spark: SparkSession, name: str, build,
-              lineage_of=None, partition_by: list[str] | None = None) -> DataFrame:
-        """Resume-or-build: committed stages load from parquet; otherwise
-        `build()` runs and the result is committed (with optional lineage
-        derived by `lineage_of(df)`)."""
+              lineage_of=None) -> DataFrame:
+        """Resume-or-build: a committed stage reads back from its snapshot
+        (no Spark job); otherwise ``build()`` runs once, inside
+        ``commit``'s data write, and ``lineage_of`` is applied to the
+        committed read-back."""
         if self.committed(name):
             return self.read(spark, name)
-        df = build()
-        lineage = lineage_of(df) if lineage_of is not None else None
-        return self.commit(name, df, lineage=lineage,
-                           partition_by=partition_by)
+        return self.commit(name, build(), lineage_of=lineage_of)
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observed row count: the action that consumes it
+    (here, a write) yields ``obs.get["rows"]`` without a second job."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def url_bucket(col: str = "url", buckets: int = 64):

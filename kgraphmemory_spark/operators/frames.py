@@ -10,7 +10,7 @@ Mirrors /root/reference/kgraphmemory/kgraph_frame_bridge.py:
   typed-slot union shape).
 - relationship frames (:451-472) are the special case with two
   urn:hasSourceEntity / urn:hasDestinationEntity entity slots —
-  ``materialize.build_frames_slots`` emits those; this module is the
+  ``materialize.build_frames``/``build_slots`` emit those; this module is the
   general n-ary case (biography frames etc., test/interaction_test.py:
   122-167: birth/death datetime slots + party text slot).
 

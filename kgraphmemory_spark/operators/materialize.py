@@ -192,14 +192,18 @@ def build_relations_docagg(pair_counts: DataFrame,
     )
 
 
-def build_frames_slots(relations: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """relations → (frames, slots) in the WordNet relationship-frame shape."""
-    frames = relations.select(
+def build_frames(relations: DataFrame) -> DataFrame:
+    """relations → frames in the WordNet relationship-frame shape."""
+    return relations.select(
         frame_uri_col(F.col("subj"), F.col("pred"), F.col("obj")).alias("frame_uri"),
         F.lit(FRAME_TYPE_NEXT).alias("frame_type"),
         F.col("subj"),
         F.col("obj"),
     )
+
+
+def build_slots(frames: DataFrame) -> DataFrame:
+    """frames → their source and destination entity slots."""
     src = frames.select(
         slot_uri_col(F.col("frame_uri"), F.lit(SLOT_SOURCE)).alias("slot_uri"),
         "frame_uri",
@@ -212,7 +216,7 @@ def build_frames_slots(relations: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.lit(SLOT_DESTINATION).alias("slot_type"),
         F.col("obj").alias("entity_value"),
     )
-    return frames, src.unionByName(dst)
+    return src.unionByName(dst)
 
 
 def build_triples(entities: DataFrame, frames: DataFrame,

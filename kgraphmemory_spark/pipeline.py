@@ -42,10 +42,11 @@ from .operators.materialize import (
     DEFAULT_GRAPH,
     build_entities_docagg,
     build_entities_preagg,
-    build_frames_slots,
+    build_frames,
     build_provenance,
     build_relations,
     build_relations_docagg,
+    build_slots,
     build_triples,
 )
 
@@ -131,17 +132,19 @@ def run_pipeline(
             if cache_intermediates and name not in _no_cache:
                 df = df.cache()
             return df
+        # resumed here rather than inside cat.stage so stages_resumed
+        # records it; cat.stage is only entered to build and commit
         if cat.committed(name):
             resumed.append(name)
             return cat.read(spark, name)
 
-        def _lineage(df: DataFrame) -> DataFrame | None:
+        def _lineage(out: DataFrame) -> DataFrame | None:
             # url-keyed stages carry per-bucket lineage; global stages
             # (canonical map, entity/relation rollups) are audited by the
             # manifest row counts instead.
-            if "url" not in df.columns:
+            if "url" not in out.columns:
                 return None
-            return lineage_by_url(df, name, extra_aggs=lineage_extra)
+            return lineage_by_url(out, name, extra_aggs=lineage_extra)
 
         return cat.stage(spark, name, build, lineage_of=_lineage)
 
@@ -268,18 +271,8 @@ def run_pipeline(
 
     relations = stage("relations", _relations)
 
-    if cat is None:
-        frames, slots = build_frames_slots(relations)
-        if cache_intermediates:
-            frames, slots = frames.cache(), slots.cache()
-    else:
-        if cat.committed("frames") and cat.committed("slots"):
-            resumed += ["frames", "slots"]
-            frames, slots = cat.read(spark, "frames"), cat.read(spark, "slots")
-        else:
-            frames, slots = build_frames_slots(relations)
-            frames = cat.commit("frames", frames)
-            slots = cat.commit("slots", slots)
+    frames = stage("frames", lambda: build_frames(relations))
+    slots = stage("slots", lambda: build_slots(frames))
 
     triples = stage("triples", lambda: build_triples(entities, frames, graph))
 

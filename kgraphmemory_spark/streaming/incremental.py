@@ -37,9 +37,10 @@ from ..operators.linking import discovered_alias_table, link_mentions, rank_cand
 from ..operators.materialize import (
     DEFAULT_GRAPH,
     build_entities,
-    build_frames_slots,
+    build_frames,
     build_provenance,
     build_relations,
+    build_slots,
     build_triples,
 )
 from ..pipeline import KGTables, same_as_edges
@@ -156,9 +157,8 @@ def finalize(spark: SparkSession, workdir: str,
                          lambda: build_entities(linked_canonical))
     relations = cat.stage(spark, "relations",
                           lambda: build_relations(raw_triples, canonical))
-    frames, slots = build_frames_slots(relations)
-    frames = cat.stage(spark, "frames", lambda: frames)
-    slots = cat.stage(spark, "slots", lambda: slots)
+    frames = cat.stage(spark, "frames", lambda: build_frames(relations))
+    slots = cat.stage(spark, "slots", lambda: build_slots(frames))
     triples = cat.stage(spark, "triples",
                         lambda: build_triples(entities, frames, graph))
     provenance = cat.stage(
@@ -269,9 +269,8 @@ def finalize_incremental(spark: SparkSession, workdir: str,
                          lambda: build_entities(linked_canonical))
     relations = cat.stage(spark, "relations",
                           lambda: build_relations(raw_triples, canonical))
-    frames, slots = build_frames_slots(relations)
-    frames = cat.stage(spark, "frames", lambda: frames)
-    slots = cat.stage(spark, "slots", lambda: slots)
+    frames = cat.stage(spark, "frames", lambda: build_frames(relations))
+    slots = cat.stage(spark, "slots", lambda: build_slots(frames))
     triples = cat.stage(spark, "triples",
                         lambda: build_triples(entities, frames, graph))
     provenance = cat.stage(
